@@ -211,220 +211,6 @@ object Probe {
       spark.stop(); return
     }
 
-    // keepLatest wide-schema tiebreak A/B (round 12): the r11 total order
-    // packed the WHOLE row into the ordering struct as tiebreak — on a
-    // ~100-column table that ships every row twice through the window sort /
-    // max_by shuffle. The fingerprint tiebreak (xxhash64 of the row) ships
-    // 8 bytes instead. Measure both orderings on both routes, interleaved,
-    // reporting shuffle-write bytes (the claim is a bytes claim).
-    if (sys.env.contains("SPARK_GRAFT_PROBE_KEEPLATEST")) {
-      import org.apache.spark.sql.Column
-      val nRows = 3000000L
-      val nKeys = 200000L // ~15 versions per key
-      val payload = (1 to 48).flatMap { i =>
-        Seq(concat(lit(s"payload_${i}_"), col("id") % 1000).as(s"s$i"),
-          (col("id") * i % 100000).as(s"n$i"))
-      }
-      val wide = spark.range(nRows).select(
-        (Seq(pmod(col("id"), lit(nKeys)).as("pk"),
-          timestamp_seconds(lit(1700000000L) + col("id")).as("ts")) ++ payload): _*)
-        .localCheckpoint(true) // measure the reduction, not the generator
-      val cols = wide.columns.toSeq
-      val packed = struct(cols.map(col): _*)
-      // the r11 ordering: whole packed row as tiebreak
-      def oldWindowed = {
-        val ord = struct(col("ts").as("__ts"), packed.as("__tie"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("pk").orderBy(ord.desc)
-        wide.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
-      }
-      def oldSalted = {
-        val ord = struct(col("ts").as("__ts"), packed.as("__tie"))
-        def ordOf(row: Column) = struct(row.getField("ts").as("__ts"), row.as("__tie"))
-        wide.groupBy(col("pk").as("__pk"), pmod(xxhash64(col("ts")), lit(16)).as("__salt"))
-          .agg(max_by(packed, ord).as("__row"))
-          .groupBy(col("__pk"))
-          .agg(max_by(col("__row"), ordOf(col("__row"))).as("__row"))
-          .select(cols.map(c => col("__row").getField(c).as(c)): _*)
-      }
-      (1 to 3).foreach { r =>
-        time(s"keepLatest-windowed-OLD-rowTie-r$r", iters = 1)(
-          oldWindowed.agg(count(lit(1))).collect()(0))
-        time(s"keepLatest-windowed-NEW-fingerprint-r$r", iters = 1)(
-          graft.streaming.IncrementalSync.keepLatest(wide, "pk", "ts", salted = false)
-            .agg(count(lit(1))).collect()(0))
-        time(s"keepLatest-salted-OLD-rowTie-r$r", iters = 1)(
-          oldSalted.agg(count(lit(1))).collect()(0))
-        time(s"keepLatest-salted-NEW-fingerprint-r$r", iters = 1)(
-          graft.streaming.IncrementalSync.keepLatest(wide, "pk", "ts", salted = true)
-            .agg(count(lit(1))).collect()(0))
-      }
-      spark.stop(); return
-    }
-
-    // first-introducer A/B (round 16): the r15 text_novelty joined the
-    // corpus-scale inverted index back to the introducer table (SMJ of two
-    // corpus frames); the rewrite derives n_novel from the introducer table
-    // alone (groupBy first_doc) and n_shingles at the scan. Cross-session
-    // x100 readings are ±50% (GC-dominated), so the claim needs a same-JVM
-    // interleaved A/B: SPARK_GRAFT_PROBE_NOVELTY=<dir>[,dir...] runs OLD
-    // (join) vs NEW (registry) x3 each, checksum action, per-dir.
-    if (sys.env.contains("SPARK_GRAFT_PROBE_NOVELTY")) {
-      import org.apache.spark.sql.DataFrame
-      def oldNovelty(documents: DataFrame): DataFrame = {
-        // the r15 shape, verbatim (operators/CorpusStats.scala @ r15; the
-        // withTokens/shinglesCol helpers are operators-private, inlined)
-        val inv = documents
-          .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-          .select(col("doc_id"), explode_outer(coalesce(
-            graft.functions.WordShingles.word_shingles(col("toks"), 3),
-            array().cast("array<string>"))).as("shingle"))
-          .where(col("shingle").isNotNull)
-        val fi = inv.groupBy(col("shingle")).agg(min(col("doc_id")).as("first_doc"))
-        val novel = inv.join(fi, Seq("shingle"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_shingles"),
-            sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
-        documents.select(col("doc_id"))
-          .join(novel, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-            coalesce(col("n_novel"), lit(0L)).as("n_novel"),
-            when(coalesce(col("n_shingles"), lit(0L)) > 0,
-              expr("n_novel * 1000000 div n_shingles")).otherwise(lit(0L))
-              .as("novelty_ppm"))
-      }
-      def checksum(df: DataFrame): Long = df.select(
-          (xxhash64(df.columns.map(col): _*) % 1000003L).as("h"))
-        .agg(sum("h")).collect()(0).getLong(0)
-      val dirs = sys.env("SPARK_GRAFT_PROBE_NOVELTY").split(",").map(_.trim)
-      dirs.foreach { d =>
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-            Tuning.adaptiveShufflePartitions(d, 32).toString))
-        val docs = graft.sources.Tables.documents(spark, d)
-        (1 to 3).foreach { r =>
-          time(s"novelty-OLD-join@${new java.io.File(d).getName}-r$r", iters = 1)(
-            checksum(oldNovelty(docs)))
-          time(s"novelty-NEW-joinfree@${new java.io.File(d).getName}-r$r", iters = 1)(
-            checksum(graft.operators.CorpusStats.textNovelty(docs)))
-        }
-      }
-      spark.stop(); return
-    }
-
-    // hour-split attribution A/B (round 17, r16 verdict #7):
-    // SPARK_GRAFT_PROBE_CUSUM_SPLIT=<dir>[,dir...] runs winCusumScalable
-    // with the production threshold (500k — engages naturally on a burst
-    // fixture) vs split-disabled (Long.MaxValue) interleaved in ONE JVM,
-    // checksum action, 3 rounds. clearCache() between rounds so every
-    // timed run recomputes the full pipeline (CacheScope re-arms dropped
-    // caches on re-invocation). The claim is twofold: checksums EQUAL
-    // (the split is a pure re-layout), and the split removes the hot
-    // chunk's single-partition window straggler (wall, not cpu).
-    if (sys.env.contains("SPARK_GRAFT_PROBE_CUSUM_SPLIT")) {
-      import org.apache.spark.sql.DataFrame
-      def checksum(df: DataFrame): Long = df.select(
-          (xxhash64(df.columns.map(col): _*) % 1000003L).as("h"))
-        .agg(sum("h")).collect()(0).getLong(0)
-      val dirs = sys.env("SPARK_GRAFT_PROBE_CUSUM_SPLIT").split(",").map(_.trim)
-      dirs.foreach { d =>
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-            Tuning.adaptiveShufflePartitions(d, 32).toString))
-        val tag = new java.io.File(d).getName
-        val ev = graft.sources.Tables.events(spark, d)
-        (1 to 3).foreach { r =>
-          time(s"cusum-SPLIT@$tag-r$r", iters = 1)(
-            checksum(graft.operators.Windows.winCusumScalable(ev)))
-          time(s"cusum-NOSPLIT@$tag-r$r", iters = 1)(
-            checksum(graft.operators.Windows.winCusumScalable(ev,
-              hourSplitThreshold = Long.MaxValue)))
-          spark.catalog.clearCache()
-        }
-      }
-      spark.stop(); return
-    }
-
-    // fixed-bench decontamination slope (round 17, r16 verdict #8):
-    // SPARK_GRAFT_PROBE_DECON_FIXED=<dir>[,dir...]. The registered demo's
-    // bench side grows with the fixture (plantNearDupes' N/29 companions),
-    // and on ScaleGen dirs the c·10⁸ id stride lands every copy ≥ the 10⁷
-    // split — at x1000 the "bench" broadcast is 9.99M of 10.3M vectors,
-    // inverting the operator's small-eval-set contract. Production
-    // decontamination holds the benchmark FIXED while the corpus grows;
-    // this block measures that path: corpus = the dir's full embeddings,
-    // bench = copy-0's planted companions (345 vectors at EVERY scale),
-    // the linear control interleaved in the same rounds.
-    if (sys.env.contains("SPARK_GRAFT_PROBE_DECON_FIXED")) {
-      import org.apache.spark.sql.DataFrame
-      def checksum(df: DataFrame): Long = df.select(
-          (xxhash64(df.columns.map(col): _*) % 1000003L).as("h"))
-        .agg(sum("h")).collect()(0).getLong(0)
-      val dirs = sys.env("SPARK_GRAFT_PROBE_DECON_FIXED").split(",").map(_.trim)
-      (1 to 3).foreach { r =>
-        dirs.foreach { d =>
-          spark.conf.set("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-              Tuning.adaptiveShufflePartitions(d, 32).toString))
-          val tag = new java.io.File(d).getName
-          val emb = graft.sources.Tables.embeddings(spark, d)
-          // plantNearDupes' companion recipe applied to copy 0 only —
-          // the SAME 345 bench vectors at every scale point
-          val bench = emb.where(col("vec_id") < 10000L && col("vec_id") % 29 === 0)
-            .withColumn("embedding",
-              when(col("vec_id") % 58 =!= 0,
-                transform(col("embedding"), (x, i) => when(i === 0, -x).otherwise(x)))
-                .otherwise(col("embedding")))
-            .withColumn("vec_id", col("vec_id") + 1000000000L)
-          time(s"gini-CONTROL@$tag-r$r", iters = 1)(
-            checksum(graft.operators.TextAnalysis.textCharGini(
-              graft.sources.Tables.documents(spark, d))))
-          time(s"decon-FIXEDBENCH@$tag-r$r", iters = 1)(
-            checksum(graft.operators.Dedup.decontaminateAgainst(emb, bench)))
-          spark.catalog.clearCache()
-        }
-      }
-      spark.stop(); return
-    }
-
-    // simhash_fast pair-volume diagnostic: is the x300 slope candidates or constants?
-    if (sys.env.contains("SPARK_GRAFT_PROBE_SIMHASH")) {
-      val docsS = graft.sources.Tables.documents(spark, sfDir)
-      time("simhash-fast-pairs")(graft.operators.Dedup.dedupSimhash(docsS, fastHash = true)
-        .agg(count(lit(1))).collect()(0))
-      spark.stop(); return
-    }
-
-    // isolate the prices-grain groupBy (the stage stock/sector share) and
-    // A/B its two plan shapes interleaved: partial-agg-then-shuffle vs
-    // shuffle-raw-then-complete-agg (group count ~ 0.89x row count, so
-    // partial aggregation reduces only ~11% — is it worth its hash table?)
-    if (sys.env.contains("SPARK_GRAFT_PROBE_PRICES")) {
-      import graft.functions.Num
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      def aggCols = Seq(
-        sum(Num.cents(col("l_extendedprice"))).as("close_cents"),
-        max(Num.cents(col("l_extendedprice"))).as("high_cents"),
-        min(Num.cents(col("l_extendedprice"))).as("low_cents"),
-        sum(Num.asLong(col("l_quantity"))).as("volume"))
-      def partialAgg = li
-        .groupBy(col("l_suppkey").as("ticker"), to_date(col("l_shipdate")).as("trade_date"))
-        .agg(aggCols.head, aggCols.tail: _*)
-      def shuffleRaw = li
-        .select(col("l_suppkey").as("ticker"), to_date(col("l_shipdate")).as("trade_date"),
-          col("l_extendedprice"), col("l_quantity"))
-        .repartition(col("ticker"), col("trade_date"))
-        .groupBy(col("ticker"), col("trade_date"))
-        .agg(aggCols.head, aggCols.tail: _*)
-      (1 to 3).foreach { round =>
-        time(s"prices-partialAgg-r$round", iters = 1)(
-          partialAgg.agg(count(lit(1))).collect()(0))
-        time(s"prices-shuffleRaw-r$round", iters = 1)(
-          shuffleRaw.agg(count(lit(1))).collect()(0))
-      }
-      spark.stop(); return
-    }
-
     // marts knee attribution: the three marts the x300 sweep flagged, each
     // run at every candidate partition count, interleaved so host drift
     // lands evenly across configs

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.Merge
+import StreamHarness.Drop
 
 /** Structured-Streaming expression of the reference's freshness model
   * (SURVEY.md §2.10): the reference has no streaming runtime — daily cron
@@ -393,59 +394,42 @@ object IncrementalSync {
     * final table projected to the batch columns. The oracle is the batch
     * `merge_upsert` SQL verbatim: the streaming path must land the exact
     * same end state the idempotent batch MERGE produces.
-    * `restartPerDrop=true` (the spec form) pays one run per drop,
-    * additionally proving checkpoint recovery across a process boundary.
     *
     * Drop timestamps are synthetic constants (day 1 / day 2) so the
     * watermark horizon is deterministic; in production the horizon is a
     * freshness SLA choice, not a correctness knob, because the foreachBatch
     * upsert stays idempotent for any replay.
     */
-  def streamUpsertEndstate(spark: SparkSession, sfDir: String,
-      restartPerDrop: Boolean = false): DataFrame = {
-    import graft.sources.Tables
-    val base = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val scratch = StreamHarness.freshScratch("stream_scratch", sfDir)
-    val srcDir = s"$scratch/drops"
-    val target = s"$scratch/table"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    // bounded drops: the sync semantics (keys 6000-7999 overlap and must be
-    // replaced) are identical at every SF, without rewriting the whole table
-    // through the streaming sink at large SF
-    val drop1 = base.where(col("event_id") < 8000)
-      .withColumn("ts", to_timestamp(lit("2025-01-01 00:00:00")))
-    val drop2 = base.where(col("event_id") >= 6000 && col("event_id") < 20000)
-      .withColumn("value", col("value") + 0.5)
-      .withColumn("ts", to_timestamp(lit("2025-01-02 00:00:00")))
-
-    def land(df: DataFrame, name: String): Unit =
-      StreamHarness.land(df, scratch, srcDir, name,
-        order = name.stripPrefix("drop").toInt - 1)
-
-    // demo-scoped lifecycle confs (state partitions, checkpoint checksums)
-    // — see StreamHarness.withDemoStreamConfs for the measured rationale
-    StreamHarness.withDemoStreamConfs(spark) {
-      // nBuckets=4 matches the demo's scoped-down state partitions: the
-      // hash-spread demo drops touch every bucket anyway, so more buckets
-      // would only buy small-file overhead here; production sizes nBuckets
-      // to (table size / desired rewrite granularity) instead
-      if (restartPerDrop) {
-        land(drop1, "drop1")
-        syncOnce(spark, drop1.schema, srcDir, target, ckpt, "event_id", "ts", nBuckets = 4)
-        land(drop2, "drop2")
-        syncOnce(spark, drop1.schema, srcDir, target, ckpt, "event_id", "ts", nBuckets = 4)
-      } else {
-        StreamHarness.landAll(() => land(drop1, "drop1"), () => land(drop2, "drop2"))
-        syncOnce(spark, drop1.schema, srcDir, target, ckpt, "event_id", "ts",
-          nBuckets = 4, maxFilesPerTrigger = Some(1))
-      }
+  def streamUpsertEndstate(spark: SparkSession, sfDir: String): DataFrame = {
+    val (drop1, drop2) = upsertDrops(upsertBase(spark, sfDir))
+    // nBuckets=4 matches the twins' scoped-down state partitions: the
+    // hash-spread demo drops touch every bucket anyway, so more buckets
+    // would only buy small-file overhead here; production sizes nBuckets
+    // to (table size / desired rewrite granularity) instead
+    val target = StreamHarness.twin(spark, "stream_scratch", sfDir,
+        Seq(Drop(drop1), Drop(drop2))) { t =>
+      syncOnce(spark, drop1.schema, t.src("drops"), t.out, t.ckpt, "event_id", "ts",
+        nBuckets = 4, maxFilesPerTrigger = Some(1))
     }
     spark.read.parquet(target)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
   }
+
+  /** The two drops of [[streamUpsertEndstate]] and its manifest twin:
+    * bounded, so the sync semantics (keys 6000-7999 overlap and must be
+    * replaced) are identical at every SF, without rewriting the whole table
+    * through the streaming sink at large SF.
+    */
+  private def upsertDrops(base: DataFrame): (DataFrame, DataFrame) =
+    (base.where(col("event_id") < 8000)
+      .withColumn("ts", to_timestamp(lit("2025-01-01 00:00:00"))),
+     base.where(col("event_id") >= 6000 && col("event_id") < 20000)
+      .withColumn("value", col("value") + 0.5)
+      .withColumn("ts", to_timestamp(lit("2025-01-02 00:00:00"))))
+
+  private def upsertBase(spark: SparkSession, sfDir: String): DataFrame =
+    graft.sources.Tables.events(spark, sfDir)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
 
   /** `stream_upsert_skew_endstate`: the sync under a pathological key
     * distribution — drop 2 is a re-delivery storm where ~90% of the rows
@@ -462,17 +446,8 @@ object IncrementalSync {
     * is xxhash64(pk) — uniform regardless of the version skew.
     */
   def streamUpsertSkewEndstate(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.Tables
-    val base = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val scratch = StreamHarness.freshScratch("stream_scratch_skew", sfDir)
-    val srcDir = s"$scratch/drops"
-    val target = s"$scratch/table"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    val drop1 = base.where(col("event_id") < 8000)
-      .withColumn("ts", to_timestamp(lit("2025-01-01 00:00:00")))
+    val base = upsertBase(spark, sfDir)
+    val (drop1, _) = upsertDrops(base)
     // hot-key storm: collapse 9 of 10 keys onto 6000; ts encodes the source
     // event_id (epoch of 2025-01-02 00:00:00 UTC + event_id seconds) so
     // versions are distinct and the latest is well-defined
@@ -481,14 +456,9 @@ object IncrementalSync {
       .withColumn("event_id",
         when(col("event_id") % 10 =!= 0, lit(6000L)).otherwise(col("event_id")))
       .withColumn("value", col("value") + 0.5)
-
-    def land(df: DataFrame, name: String): Unit =
-      StreamHarness.land(df, scratch, srcDir, name,
-        order = name.stripPrefix("drop").toInt - 1)
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      StreamHarness.landAll(() => land(drop1, "drop1"), () => land(drop2, "drop2"))
-      syncOnce(spark, drop1.schema, srcDir, target, ckpt, "event_id", "ts",
+    val target = StreamHarness.twin(spark, "stream_scratch_skew", sfDir,
+        Seq(Drop(drop1), Drop(drop2))) { t =>
+      syncOnce(spark, drop1.schema, t.src("drops"), t.out, t.ckpt, "event_id", "ts",
         nBuckets = 4, maxFilesPerTrigger = Some(1), saltedKeepLatest = true)
     }
     spark.read.parquet(target)
@@ -501,38 +471,12 @@ object IncrementalSync {
     * the object-store commit path lands the identical end state. The final
     * vacuum exercises garbage collection of the superseded first-drop data.
     */
-  def streamUpsertManifestEndstate(spark: SparkSession, sfDir: String,
-      restartPerDrop: Boolean = false): DataFrame = {
-    import graft.sources.Tables
-    val base = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val scratch = StreamHarness.freshScratch("stream_scratch_manifest", sfDir)
-    val srcDir = s"$scratch/drops"
-    val target = s"$scratch/table"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    val drop1 = base.where(col("event_id") < 8000)
-      .withColumn("ts", to_timestamp(lit("2025-01-01 00:00:00")))
-    val drop2 = base.where(col("event_id") >= 6000 && col("event_id") < 20000)
-      .withColumn("value", col("value") + 0.5)
-      .withColumn("ts", to_timestamp(lit("2025-01-02 00:00:00")))
-
-    def land(df: DataFrame, name: String): Unit =
-      StreamHarness.land(df, scratch, srcDir, name,
-        order = name.stripPrefix("drop").toInt - 1)
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      if (restartPerDrop) {
-        land(drop1, "drop1")
-        syncOnceManifest(spark, drop1.schema, srcDir, target, ckpt, "event_id", "ts", nBuckets = 4)
-        land(drop2, "drop2")
-        syncOnceManifest(spark, drop1.schema, srcDir, target, ckpt, "event_id", "ts", nBuckets = 4)
-      } else {
-        StreamHarness.landAll(() => land(drop1, "drop1"), () => land(drop2, "drop2"))
-        syncOnceManifest(spark, drop1.schema, srcDir, target, ckpt, "event_id", "ts",
-          nBuckets = 4, maxFilesPerTrigger = Some(1))
-      }
+  def streamUpsertManifestEndstate(spark: SparkSession, sfDir: String): DataFrame = {
+    val (drop1, drop2) = upsertDrops(upsertBase(spark, sfDir))
+    val target = StreamHarness.twin(spark, "stream_scratch_manifest", sfDir,
+        Seq(Drop(drop1), Drop(drop2))) { t =>
+      syncOnceManifest(spark, drop1.schema, t.src("drops"), t.out, t.ckpt, "event_id", "ts",
+        nBuckets = 4, maxFilesPerTrigger = Some(1))
     }
     // GC the superseded commit dirs, then re-resolve: the vacuumed table
     // must still serve the committed tip

@@ -93,36 +93,18 @@ object Scd2Sync {
     * run over one checkpoint (`maxFilesPerTrigger=1` — version granularity
     * is per micro-batch, so the two-version history is identical to the
     * two-run form). The end state must equal the batch [[Scd.scd2Merge]]
-    * exactly — same oracle SQL verbatim. `restartPerDrop=true` pays one
-    * run per drop, proving recovery across a process boundary.
+    * exactly — same oracle SQL verbatim.
     */
-  def streamScd2Endstate(spark: SparkSession, sfDir: String,
-      restartPerDrop: Boolean = false): DataFrame = {
+  def streamScd2Endstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     val cut = to_timestamp(lit("2024-01-24"))
-    val scratch = StreamHarness.freshScratch("stream_scd2", sfDir)
-    val srcDir = s"$scratch/drops"
-    val target = s"$scratch/dim"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    val drop1 = events.where(col("ts") < cut)
-    val drop2 = events.where(col("ts") >= cut)
-    StreamHarness.withDemoStreamConfs(spark) {
-      if (restartPerDrop) {
-        StreamHarness.land(drop1, scratch, srcDir, "drop1", order = 0)
-        syncOnce(spark, events.schema, srcDir, target, ckpt)
-        StreamHarness.land(drop2, scratch, srcDir, "drop2", order = 1)
-        syncOnce(spark, events.schema, srcDir, target, ckpt)
-      } else {
-        StreamHarness.landAll(
-          () => StreamHarness.land(drop1, scratch, srcDir, "drop1", order = 0),
-          () => StreamHarness.land(drop2, scratch, srcDir, "drop2", order = 1))
-        syncOnce(spark, events.schema, srcDir, target, ckpt,
-          maxFilesPerTrigger = Some(1))
-      }
+    val drops = Seq(Drop(events.where(col("ts") < cut)), Drop(events.where(col("ts") >= cut)))
+    val target = StreamHarness.twin(spark, "stream_scd2", sfDir, drops) { t =>
+      syncOnce(spark, events.schema, t.src("drops"), t.out, t.ckpt,
+        maxFilesPerTrigger = Some(1))
     }
     spark.read.parquet(target)
       .select(col("user_id"), col("state"), col("valid_from"), col("valid_to"),

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming transform surface beyond the ingest loop (builder brief:
   * "watermarks + windowed aggs; mapGroupsWithState/flatMapGroupsWithState
@@ -142,39 +142,11 @@ object Sessionize {
     * user never overlap: the per-user ordinal by session_start is the batch
     * twin's running new-session sum.
     */
-  def streamSessionizeEndstate(spark: SparkSession, sfDir: String,
-      restartPerDrop: Boolean = false): DataFrame = {
+  def streamSessionizeEndstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
+    import spark.implicits._
     val events = Tables.events(spark, sfDir).select(col("user_id"), col("ts"))
-    val scratch = StreamHarness.freshScratch("stream_sess", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    def runOnce(): Unit = {
-      import spark.implicits._
-      // maxFilesPerTrigger=1: each landed drop is its own micro-batch, so
-      // both drops flush through ONE query lifecycle in the default form
-      // (watermarks are computed from the previous batch — the sentinel
-      // batch plants the advanced watermark and the trailing no-data batch
-      // fires the session timeouts), instead of paying a full start/stop
-      // per drop. See StreamJoin.streamOuterJoinEndstate, the origin of
-      // the trick.
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir).as[Evt]
-      val q = sessionize(stream, gapMs = 30L * 60 * 1000)
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-    }
-
     // bounded scalar (one max over the drop, driver-side): the sentinel must
     // outrun every real session's `last + gap` timeout by more than the
     // 1-hour watermark delay
@@ -182,29 +154,13 @@ object Sessionize {
     val sentinel = spark.range(1).select(
       lit(-1L).as("user_id"),
       timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000)).as("ts"))
-
-    // demo-scoped lifecycle confs, as in IncrementalSync's demo — see
-    // StreamHarness.withDemoStreamConfs. restartPerDrop=true (the spec
-    // form) stops and restarts the query between drops, additionally
-    // proving state recovery from the checkpoint across a process
-    // boundary; the default lands both drops up front and pays one
-    // lifecycle — the bench measures the operator, the spec the restart.
-    StreamHarness.withDemoStreamConfs(spark) {
-      if (restartPerDrop) {
-        land(events, scratch, srcDir, "drop1", order = 0)
-        runOnce()
-        land(sentinel, scratch, srcDir, "drop2", order = 1)
-        runOnce()
-      } else {
-        StreamHarness.landAll(
-          () => land(events, scratch, srcDir, "drop1", order = 0),
-          () => land(sentinel, scratch, srcDir, "drop2", order = 1))
-        runOnce()
-      }
+    val out = StreamHarness.twin(spark, "stream_sess", sfDir,
+        Seq(Drop(events), Drop(sentinel))) { t =>
+      t.runAppend(sessionize(t.stream(events.schema).as[Evt], gapMs = 30L * 60 * 1000).toDF())
     }
 
     val w = Window.partitionBy("user_id").orderBy("session_start")
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .where(col("user_id") >= 0) // the sentinel user's own session is open by design
       .select(
         col("user_id"),
@@ -222,52 +178,19 @@ object Sessionize {
     * closes and flushes to the append sink. Day windows are epoch-aligned
     * UTC, so the oracle is the plain batch GROUP BY over date_trunc('day').
     */
-  def streamDailyCountsEndstate(spark: SparkSession, sfDir: String,
-      restartPerDrop: Boolean = false): DataFrame = {
+  def streamDailyCountsEndstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir).select(col("ts"), col("event_type"))
-    val scratch = StreamHarness.freshScratch("stream_daily", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    def runOnce(): Unit = {
-      // one drop per micro-batch — see streamSessionizeEndstate
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = dailyTypeCounts(stream)
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-    }
-
     val maxUs = events.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val sentinel = spark.range(1).select(
       timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000)).as("ts"),
       lit("__sentinel").as("event_type"))
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      if (restartPerDrop) {
-        land(events, scratch, srcDir, "drop1", order = 0)
-        runOnce()
-        land(sentinel, scratch, srcDir, "drop2", order = 1)
-        runOnce()
-      } else {
-        StreamHarness.landAll(
-          () => land(events, scratch, srcDir, "drop1", order = 0),
-          () => land(sentinel, scratch, srcDir, "drop2", order = 1))
-        runOnce()
-      }
+    val out = StreamHarness.twin(spark, "stream_daily", sfDir,
+        Seq(Drop(events), Drop(sentinel))) { t =>
+      t.runAppend(dailyTypeCounts(t.stream(events.schema)))
     }
-
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .where(col("event_type") =!= "__sentinel")
       .select(col("window_start"), col("event_type"), col("event_count"))
   }
@@ -278,7 +201,7 @@ object Sessionize {
     * watermark only ever closes windows, never rejects rows).
     *
     * Four drops through one AvailableNow lifecycle (maxFilesPerTrigger=1,
-    * order-pinned — see [[StreamHarness.land]]):
+    * order-pinned — see [[StreamHarness.twin]]):
     *   1. the older half of `events` (on time);
     *   2. the newer half — ends with the full corpus ingested and the
     *      watermark advanced to max(ts) − 1 day (watermarks are computed
@@ -303,13 +226,8 @@ object Sessionize {
     */
   def streamLateDataEndstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir).select(col("ts"), col("event_type"))
-    val scratch = StreamHarness.freshScratch("stream_late", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
 
     // bounded scalars (1-row agg): the split pivot and the probe/sentinel
     // anchors. minUs/maxUs bound the real data; the probes sit 10 days
@@ -325,29 +243,18 @@ object Sessionize {
     val sentinel = spark.range(1).select(
       timestamp_micros(lit(maxUs + 30 * day)).as("ts"),
       lit("__sentinel").as("event_type"))
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      StreamHarness.landAll(
-        () => land(events.where(unix_micros(col("ts")) < midUs), scratch, srcDir, "drop1", order = 0),
-        () => land(events.where(unix_micros(col("ts")) >= midUs), scratch, srcDir, "drop2", order = 1),
-        () => land(late, scratch, srcDir, "drop3", order = 2),
-        () => land(sentinel, scratch, srcDir, "drop4", order = 3))
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = dailyTypeCounts(stream)
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
+    val drops = Seq(
+      Drop(events.where(unix_micros(col("ts")) < midUs)),
+      Drop(events.where(unix_micros(col("ts")) >= midUs)),
+      Drop(late),
+      Drop(sentinel))
+    val out = StreamHarness.twin(spark, "stream_late", sfDir, drops) { t =>
+      t.runAppend(dailyTypeCounts(t.stream(events.schema)))
     }
 
     // only the flush sentinel is filtered — `__late` rows are deliberately
     // NOT: their absence is the assertion under test
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .where(col("event_type") =!= "__sentinel")
       .select(col("window_start"), col("event_type"), col("event_count"))
   }

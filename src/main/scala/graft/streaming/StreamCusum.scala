@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Continuous change-point monitoring — the streaming twin of the batch
   * [[graft.operators.Windows.winCusum]] family at DAILY grain: the batch
@@ -37,57 +37,33 @@ object StreamCusum {
   def streamCusumEndstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
     import graft.functions.Num
-    import StreamHarness.land
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir)
     val narrow = events.select(col("ts"), col("event_type"),
       Num.cents(col("value")).as("cents"))
-
-    val scratch = StreamHarness.freshScratch("stream_cusum", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema("ts timestamp, event_type string, cents bigint")
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream
-        .withWatermark("ts", "1 day")
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n_d"), sum(col("cents")).as("v_d"))
-        .select(col("window.start").as("day_start"), col("event_type"),
-          col("n_d"), col("v_d"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-    }
 
     val mid = lit("2024-01-16").cast("date")
     val sentinel = spark.range(1).select(
       to_timestamp(lit("2024-03-01 00:00:00")).as("ts"),
       lit("__sentinel").as("event_type"), lit(0L).as("cents"))
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      StreamHarness.landAll(
-        () => land(narrow.where(to_date(col("ts")) < mid), scratch, srcDir,
-          "drop1", order = 0),
-        () => land(narrow.where(to_date(col("ts")) >= mid), scratch, srcDir,
-          "drop2", order = 1),
-        () => land(sentinel, scratch, srcDir, "drop3", order = 2))
-      runOnce()
+    val drops = Seq(
+      Drop(narrow.where(to_date(col("ts")) < mid)),
+      Drop(narrow.where(to_date(col("ts")) >= mid)),
+      Drop(sentinel))
+    val out = StreamHarness.twin(spark, "stream_cusum", sfDir, drops) { t =>
+      t.runAppend(t.stream(StructType.fromDDL("ts timestamp, event_type string, cents bigint"))
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n_d"), sum(col("cents")).as("v_d"))
+        .select(col("window.start").as("day_start"), col("event_type"),
+          col("n_d"), col("v_d")))
     }
 
     // batch-side CUSUM over the closed per-(type, day) series — the
     // winCusum window algebra at daily grain (running sum + running
     // extrema, virtual C_0 = 0 in the extrema, truncated mean, earliest-peak
     // tie-break via the broadcast peaks self-join)
-    val series = spark.read.parquet(outDir)
+    val series = spark.read.parquet(out)
       .where(col("event_type") =!= "__sentinel")
       .select(col("event_type"), to_date(col("day_start")).as("day"),
         col("n_d"), col("v_d"))

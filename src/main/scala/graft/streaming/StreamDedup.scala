@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming exact deduplication — the ingestion-time twin of
   * `dedup_exact`: keep the first arrival of each content hash and drop
@@ -38,56 +37,27 @@ object StreamDedup {
   def streamDedupEndstate(spark: SparkSession, sfDir: String,
       restartPerDrop: Boolean = false): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("event_type"), col("props"))
-    val scratch = StreamHarness.freshScratch("stream_dedup", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val writer = stream
-        .withColumn("content_hash",
-          md5(concat_ws("|", col("event_type"), col("props"))))
-        .withWatermark("ts", "3650 days")
-        .dropDuplicatesWithinWatermark("content_hash")
-        .select(col("content_hash"), col("event_type"), col("props"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
+    val drops = Seq(
+      Drop(events.where(pmod(col("event_id"), lit(2)) === 0)),
+      Drop(events)) // full replay + the odd half
+    val out = StreamHarness.twin(spark, "stream_dedup", sfDir, drops, restartPerDrop) { t =>
       // trailing watermark-only batch disabled (r18): append-mode
       // dropDuplicatesWithinWatermark emits a first occurrence on ARRIVAL;
       // the trailing batch only evicts expired state — see
       // StreamHarness.withoutFinalNoDataBatch's whitelist
       StreamHarness.withoutFinalNoDataBatch(spark) {
-        writer.start().awaitTermination()
+        t.runAppend(t.stream(events.schema)
+          .withColumn("content_hash",
+            md5(concat_ws("|", col("event_type"), col("props"))))
+          .withWatermark("ts", "3650 days")
+          .dropDuplicatesWithinWatermark("content_hash")
+          .select(col("content_hash"), col("event_type"), col("props")))
       }
     }
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      if (restartPerDrop) {
-        land(events.where(pmod(col("event_id"), lit(2)) === 0), scratch, srcDir,
-          "drop1", order = 0)
-        runOnce()
-        land(events, scratch, srcDir, "drop2", order = 1) // full replay + the odd half
-        runOnce()
-      } else {
-        StreamHarness.landAll(
-          () => land(events.where(pmod(col("event_id"), lit(2)) === 0), scratch, srcDir,
-            "drop1", order = 0),
-          () => land(events, scratch, srcDir, "drop2", order = 1)) // full replay + the odd half
-        runOnce()
-      }
-    }
-
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .select(col("content_hash"), col("event_type"), col("props"))
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Continuous distribution-drift monitoring — the streaming twin of the
   * batch [[graft.operators.Drift]] family, but along the TEMPORAL axis:
@@ -41,7 +41,7 @@ object StreamDrift {
     */
   def streamDriftEndstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val documents = Tables.documents(spark, sfDir)
     // exact UTC midnight (19675 days since epoch): tumbling day windows are
     // EPOCH-ALIGNED, so a non-midnight stamp would land in a window whose
@@ -54,50 +54,27 @@ object StreamDrift {
       df.select(timestamp_micros(lit(us)).as("ts"), col("source"),
         bucket.as("bucket"))
 
-    val scratch = StreamHarness.freshScratch("stream_drift", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema("ts timestamp, source string, bucket bigint")
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream
+    val sentinel = spark.range(1).select(
+      timestamp_micros(lit(day1Us + 30 * dayUs)).as("ts"),
+      lit("__sentinel").as("source"), lit(0L).as("bucket"))
+    val drops = Seq(
+      Drop(stamped(documents.where(pmod(expr("doc_id div 20"), lit(2)) === 0), day1Us)),
+      Drop(stamped(documents.where(pmod(expr("doc_id div 20"), lit(2)) === 1),
+        day1Us + dayUs)),
+      Drop(sentinel))
+    val out = StreamHarness.twin(spark, "stream_drift", sfDir, drops) { t =>
+      t.runAppend(t.stream(StructType.fromDDL("ts timestamp, source string, bucket bigint"))
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 day"), col("source"), col("bucket"))
         .agg(count(lit(1)).as("cnt"))
         .select(col("window.start").as("day_start"), col("source"),
-          col("bucket"), col("cnt"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-    }
-
-    val sentinel = spark.range(1).select(
-      timestamp_micros(lit(day1Us + 30 * dayUs)).as("ts"),
-      lit("__sentinel").as("source"), lit(0L).as("bucket"))
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      StreamHarness.landAll(
-        () => land(stamped(documents.where(pmod(expr("doc_id div 20"), lit(2)) === 0), day1Us),
-          scratch, srcDir, "drop1", order = 0),
-        () => land(stamped(documents.where(pmod(expr("doc_id div 20"), lit(2)) === 1),
-          day1Us + dayUs), scratch, srcDir, "drop2", order = 1),
-        () => land(sentinel, scratch, srcDir, "drop3", order = 2))
-      runOnce()
+          col("bucket"), col("cnt")))
     }
 
     // batch-side statistic over the closed histograms: TV between day 2
     // and day 1 per source, shares floored to ppm over the union of
     // buckets (a bucket absent from a day contributes share 0)
-    val hist = spark.read.parquet(outDir)
+    val hist = spark.read.parquet(out)
       .where(col("source") =!= "__sentinel")
       .withColumn("day",
         when(unix_micros(col("day_start")) === day1Us, lit(1L)).otherwise(lit(2L)))

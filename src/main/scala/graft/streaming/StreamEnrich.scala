@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-static enrichment join — the remaining Structured Streaming join
   * class after upsert/sessionize/windowed-agg/dedup: each micro-batch of
@@ -36,53 +35,23 @@ object StreamEnrich {
   def streamEnrichEndstate(spark: SparkSession, sfDir: String,
       restartPerDrop: Boolean = false): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val customer = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val scratch = StreamHarness.freshScratch("stream_enrich", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    def runOnce(): Unit = {
-      val q = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    // restarting, drop 1's file is still in the source dir — run 2 must
+    // skip it via the checkpoint
+    val drops = Seq(
+      Drop(events.where(pmod(col("event_id"), lit(2)) === 0)),
+      Drop(events.where(pmod(col("event_id"), lit(2)) === 1)))
+    val out = StreamHarness.twin(spark, "stream_enrich", sfDir, drops, restartPerDrop) { t =>
+      t.runAppend(t.stream(events.schema)
         .join(broadcast(customer), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"), col("event_type"),
-          col("c_mktsegment").as("segment"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
+          col("c_mktsegment").as("segment")))
     }
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      if (restartPerDrop) {
-        land(events.where(pmod(col("event_id"), lit(2)) === 0), scratch, srcDir,
-          "drop1", order = 0)
-        runOnce()
-        // drop1.parquet is still in srcDir — run 2 must skip it via checkpoint
-        land(events.where(pmod(col("event_id"), lit(2)) === 1), scratch, srcDir,
-          "drop2", order = 1)
-        runOnce()
-      } else {
-        StreamHarness.landAll(
-          () => land(events.where(pmod(col("event_id"), lit(2)) === 0), scratch, srcDir,
-            "drop1", order = 0),
-          () => land(events.where(pmod(col("event_id"), lit(2)) === 1), scratch, srcDir,
-            "drop2", order = 1))
-        runOnce()
-      }
-    }
-
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .select(col("event_id"), col("user_id"), col("event_type"), col("segment"))
   }
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAM-STREAM interval join — the last Structured Streaming join class
   * in the engine (upsert / sessionize / windowed agg / dedup / stream-static
@@ -86,63 +85,29 @@ object StreamJoin {
     */
   def streamOuterJoinEndstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val scratch = StreamHarness.freshScratch("stream_ssouter", sfDir)
-    val (srcC, srcE) = (s"$scratch/clicks", s"$scratch/errors")
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcC).mkdirs()
-    new java.io.File(srcE).mkdirs()
-
     val base = events.select(col("event_id"), col("ts"), col("user_id"))
-    def runOnce(): Unit = {
-      // maxFilesPerTrigger=1: AvailableNow slices the pending files into
-      // one micro-batch each, so both sentinel waves flush inside ONE
-      // query lifecycle (watermarks are computed from the previous batch —
-      // wave 2's batch evaluates wave 1's watermark) instead of paying a
-      // full start/stop per wave
-      val q = clickErrorAttributionOuter(
-        spark.readStream.schema(base.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcC),
-        spark.readStream.schema(base.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcE))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-    }
-
     val clicks = events.where(col("event_type") === "click").select(base.columns.map(col): _*)
     val errors = events.where(col("event_type") === "error").select(base.columns.map(col): _*)
     val maxUs = events.agg(max(unix_micros(col("ts")))).head().getLong(0)
-    def sentinel(daysOut: Long) = spark.range(1).select(
+    val sentinel = spark.range(1).select(
       lit(-1L).as("event_id"),
-      timestamp_micros(lit(maxUs + daysOut * 24 * 3600 * 1000000L)).as("ts"),
+      timestamp_micros(lit(maxUs + 30L * 24 * 3600 * 1000000L)).as("ts"),
       lit(-1L).as("user_id"))
-    // ONE lifecycle for data + one sentinel wave: maxFilesPerTrigger=1
-    // slices the two landed files per source into micro-batches (c1+e1
-    // data, then the sentinel wave plants the advanced watermark on BOTH
-    // sides, then the engine's final no-data batch evaluates it and
-    // flushes unmatched clicks) — the pinned-mtime land order is the
-    // batch order
-    StreamHarness.withDemoStreamConfs(spark) {
-      // all four drops are computable up front (maxUs already collected);
-      // overlap their single-task writes — order rides the pinned mtimes
-      StreamHarness.landAll(
-        () => land(clicks, scratch, srcC, "c1", order = 0),
-        () => land(errors, scratch, srcE, "e1", order = 0),
-        () => land(sentinel(30), scratch, srcC, "c2", order = 1),
-        () => land(sentinel(30), scratch, srcE, "e2", order = 1))
-      runOnce()
+    // ONE lifecycle for data + one sentinel wave: one drop per source per
+    // micro-batch (c1+e1 data, then the sentinel wave plants the advanced
+    // watermark on BOTH sides, then the engine's final no-data batch
+    // evaluates it and flushes unmatched clicks)
+    val drops = Seq(
+      Drop(clicks, "clicks"), Drop(errors, "errors"),
+      Drop(sentinel, "clicks"), Drop(sentinel, "errors"))
+    val out = StreamHarness.twin(spark, "stream_ssouter", sfDir, drops) { t =>
+      t.runAppend(clickErrorAttributionOuter(
+        t.stream(base.schema, "clicks"), t.stream(base.schema, "errors")))
     }
-
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .where(col("user_id") >= 0) // the sentinel click's own unmatched row
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("error_id"), col("error_ts"))
@@ -158,66 +123,40 @@ object StreamJoin {
     */
   def streamStreamJoinEndstate(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val events = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val scratch = StreamHarness.freshScratch("stream_ssjoin", sfDir)
-    val (srcC, srcE) = (s"$scratch/clicks", s"$scratch/errors")
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcC).mkdirs()
-    new java.io.File(srcE).mkdirs()
-
     val base = events.select(col("event_id"), col("ts"), col("user_id"))
-    def runOnce(): Unit = {
-      val clicks = spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcC)
-      val errors = spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcE)
-      val writer = clickErrorAttribution(clicks, errors)
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
+    val clicks = events.where(col("event_type") === "click").select(base.columns.map(col): _*)
+    val errors = events.where(col("event_type") === "error").select(base.columns.map(col): _*)
+    // the drops split the TIMELINE, not the id space: batch 2's rows must
+    // all sit above batch 1's advanced watermark or the engine rightly drops
+    // them as late (the oracle is the complete batch join, so nothing may
+    // drop). Cross-boundary pairs — a batch-2 click matching a batch-1
+    // error within the hour — can only come from the buffered join state,
+    // which is what the split exercises. Bounded driver scalar, same
+    // discipline as the sessionize sentinel.
+    val Array(minUs, maxUs) = events
+      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
+      .head().toSeq.map(_.asInstanceOf[Long]).toArray
+    val midTs = timestamp_micros(lit((minUs + maxUs) / 2))
+    val drops = Seq(
+      Drop(clicks.where(col("ts") < midTs), "clicks"),
+      Drop(errors.where(col("ts") < midTs), "errors"),
+      Drop(clicks.where(col("ts") >= midTs), "clicks"),
+      Drop(errors.where(col("ts") >= midTs), "errors"))
+    val out = StreamHarness.twin(spark, "stream_ssjoin", sfDir, drops) { t =>
       // trailing watermark-only batch disabled (r18): INNER interval join —
       // matches emit eagerly when both rows exist; the trailing batch only
       // evicts out-of-horizon state. The OUTER twin above must NOT do this
       // (its unmatched-click flush IS that batch) — see
       // StreamHarness.withoutFinalNoDataBatch's whitelist
       StreamHarness.withoutFinalNoDataBatch(spark) {
-        writer.start().awaitTermination()
+        t.runAppend(clickErrorAttribution(
+          t.stream(base.schema, "clicks"), t.stream(base.schema, "errors")))
       }
     }
-
-    val clicks = events.where(col("event_type") === "click").select(base.columns.map(col): _*)
-    val errors = events.where(col("event_type") === "error").select(base.columns.map(col): _*)
-    // the drops split the TIMELINE, not the id space: run 2's rows must all
-    // sit above run 1's advanced watermark or the engine rightly drops them
-    // as late (the oracle is the complete batch join, so nothing may drop).
-    // Cross-boundary pairs — a run-2 click matching a run-1 error within
-    // the hour — can only come from the buffered join state, which is what
-    // the two-run split is exercising. Bounded driver scalar, same
-    // discipline as the sessionize sentinel.
-    val Array(minUs, maxUs) = events
-      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    val midTs = timestamp_micros(lit((minUs + maxUs) / 2))
-    // one lifecycle, two micro-batches per source (maxFilesPerTrigger=1,
-    // pinned land order): cross-boundary pairs — a batch-2 click matching
-    // a batch-1 error within the hour — still come only from the buffered
-    // join state, which is what the timeline split exercises
-    StreamHarness.withDemoStreamConfs(spark) {
-      StreamHarness.landAll(
-        () => land(clicks.where(col("ts") < midTs), scratch, srcC, "c1", order = 0),
-        () => land(errors.where(col("ts") < midTs), scratch, srcE, "e1", order = 0),
-        () => land(clicks.where(col("ts") >= midTs), scratch, srcC, "c2", order = 1),
-        () => land(errors.where(col("ts") >= midTs), scratch, srcE, "e2", order = 1))
-      runOnce()
-    }
-
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("error_id"), col("error_ts"))
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Model-gated ingest filtering — the streaming serving shape of the
   * hashed-feature quality classifier ([[graft.operators.TextAnalysis]]):
@@ -33,52 +32,19 @@ object StreamModelFilter {
   def streamModelFilterEndstate(spark: SparkSession, sfDir: String,
       restartPerDrop: Boolean = false): DataFrame = {
     import graft.sources.Tables
-    import StreamHarness.land
+    import StreamHarness.Drop
     val documents = Tables.documents(spark, sfDir)
     // offline training pass: the weight table + threshold freeze here,
     // BEFORE the stream starts — drops never touch the model
     val scorer = graft.operators.TextAnalysis.qualityClassifierScorer(documents)
-    val scratch = StreamHarness.freshScratch("stream_model_filter", sfDir)
-    val srcDir = s"$scratch/drops"
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    new java.io.File(srcDir).mkdirs()
-
-    def runOnce(): Unit = {
-      val q = scorer(
-        spark.readStream.schema(documents.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir))
-        .where(col("kept"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
+    val drops = Seq(
+      Drop(documents.where(pmod(col("doc_id"), lit(2)) === 0)),
+      Drop(documents.where(pmod(col("doc_id"), lit(2)) === 1)))
+    val out = StreamHarness.twin(spark, "stream_model_filter", sfDir, drops,
+        restartPerDrop) { t =>
+      t.runAppend(scorer(t.stream(documents.schema)).where(col("kept")))
     }
-
-    StreamHarness.withDemoStreamConfs(spark) {
-      if (restartPerDrop) {
-        land(documents.where(pmod(col("doc_id"), lit(2)) === 0), scratch, srcDir,
-          "drop1", order = 0)
-        runOnce()
-        // drop1.parquet is still in srcDir — run 2 must skip it via checkpoint
-        land(documents.where(pmod(col("doc_id"), lit(2)) === 1), scratch, srcDir,
-          "drop2", order = 1)
-        runOnce()
-      } else {
-        StreamHarness.landAll(
-          () => land(documents.where(pmod(col("doc_id"), lit(2)) === 0), scratch, srcDir,
-            "drop1", order = 0),
-          () => land(documents.where(pmod(col("doc_id"), lit(2)) === 1), scratch, srcDir,
-            "drop2", order = 1))
-        runOnce()
-      }
-    }
-
-    spark.read.parquet(outDir)
+    spark.read.parquet(out)
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("score_ppm"),
         col("threshold_ppm"), col("kept"), col("is_holdout"))
   }

@@ -718,6 +718,44 @@ class StreamingSpec extends SparkTestBase {
     } finally out.unpersist()
   }
 
+  test("a stream twin restores the caller's confs: set or unset, also when its body throws") {
+    import graft.streaming.{StreamDedup, StreamHarness}
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    // (explicitly set value, value a read returns) per key
+    def confs = keys.map(k => (spark.conf.getAll.get(k), spark.conf.get(k)))
+    def unchangedBy(body: => Unit): Unit = {
+      val before = confs
+      body
+      assert(confs == before, s"confs moved: $before -> $confs")
+    }
+    // StreamDedup runs both windows: the twin's and the no-data whitelist's
+    def twinRun(): Unit = StreamDedup.streamDedupEndstate(spark, sf): Unit
+    def twinThrows(): Unit = intercept[IllegalStateException] {
+      StreamHarness.twin(spark, "conf_restore", sf, Seq.empty) { _ =>
+        StreamHarness.withoutFinalNoDataBatch(spark)(throw new IllegalStateException("boom"))
+      }
+    }: Unit
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    try {
+      // previously set, to values the scaffold overrides
+      spark.conf.set(keys(0), "7")
+      spark.conf.set(keys(1), "true")
+      spark.conf.set(keys(2), "true")
+      unchangedBy(twinRun())
+      unchangedBy(twinThrows())
+      // previously unset
+      keys.foreach(spark.conf.unset)
+      assert(confs.forall(_._1.isEmpty))
+      unchangedBy(twinRun())
+      unchangedBy(twinThrows())
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("stream drift: end-state TV equals the batch parity-split computation") {
     import org.apache.spark.sql.functions._
     val out = graft.streaming.StreamDrift.streamDriftEndstate(spark, sf).cache()
