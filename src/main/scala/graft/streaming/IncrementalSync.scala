@@ -327,7 +327,11 @@ object IncrementalSync {
       nBuckets: Int = 16,
       maxFilesPerTrigger: Option[Int] = None,
       saltedKeepLatest: Boolean = false): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    // the session's Hadoop conf (SQL conf over the context's), as Spark's
+    // own file I/O builds it, so the manifest reads and commits see the
+    // same `fs.*` keys as the stream and its writes
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    spark.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
 
     val reader = spark.readStream.schema(schema)
     val stream = maxFilesPerTrigger

@@ -179,16 +179,21 @@ private[graft] object StreamHarness {
     withConfs(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
   /** The twins' conf window: [[StateParts]] shuffle (= state) partitions,
-    * and no checkpoint checksums — the Spark 4 checksum file manager writes
-    * a sidecar checksum per checkpoint file (offsets/commits/state deltas,
-    * a dozen small fsyncs per batch here). Real deployments keep it for
-    * corruption detection on remote checkpoints; for a local demo
-    * checkpoint it is pure per-batch latency.
+    * and `file://` served by [[ForkFreeLocalFileSystem]]. Every file the
+    * twin touches — drop landing, file-source listing, the parquet sink
+    * and its log, offset/commit logs, state-store deltas — takes its Hadoop
+    * conf from the session's SQL conf, so this window covers all of it.
+    * Without libhadoop the stock local filesystem forks `chmod` per created
+    * file or directory and `readlink` per FileContext rename/exists, ~1 ms
+    * each and ~1,390 per `stream_sync` pass. `fs.file.impl.disable.cache`
+    * is needed because Hadoop caches one `file://` instance per JVM, keyed
+    * without the conf: with the stock instance cached, the impl key alone
+    * would never be read.
     */
   private def withDemoStreamConfs[T](spark: SparkSession)(body: => T): T =
     withConfs(spark,
-      "spark.sql.shuffle.partitions" -> StateParts.toString,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")(body)
+      ("spark.sql.shuffle.partitions" -> StateParts.toString) +:
+        ForkFreeLocalFileSystem.confs: _*)(body)
 
   /** Set `kvs` for the duration of `body`, then restore every key to what
     * it was — a set value is set back, an unset key is unset again — also

@@ -722,9 +722,11 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.{StreamDedup, StreamHarness}
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      "spark.sql.streaming.noDataMicroBatches.enabled")
-    // (explicitly set value, value a read returns) per key
-    def confs = keys.map(k => (spark.conf.getAll.get(k), spark.conf.get(k)))
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "fs.file.impl", "fs.AbstractFileSystem.file.impl", "fs.file.impl.disable.cache")
+    // (explicitly set value, value a read returns) per key; `get` throws on
+    // an unset key that is not a SQL conf (the Hadoop keys), `getOption` not
+    def confs = keys.map(k => (spark.conf.getAll.get(k), spark.conf.getOption(k)))
     def unchangedBy(body: => Unit): Unit = {
       val before = confs
       body
@@ -743,6 +745,9 @@ class StreamingSpec extends SparkTestBase {
       spark.conf.set(keys(0), "7")
       spark.conf.set(keys(1), "true")
       spark.conf.set(keys(2), "true")
+      spark.conf.set(keys(3), classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+      spark.conf.set(keys(4), classOf[org.apache.hadoop.fs.local.LocalFs].getName)
+      spark.conf.set(keys(5), "false")
       unchangedBy(twinRun())
       unchangedBy(twinThrows())
       // previously unset
@@ -753,6 +758,31 @@ class StreamingSpec extends SparkTestBase {
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a stream twin forks no chmod or readlink") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    val jfr = Files.createTempFile("graft_spawns", ".jfr")
+    try {
+      rec.start()
+      // the dedup twin, and the manifest twin, whose commits take a Hadoop
+      // conf of their own
+      graft.streaming.StreamDedup.streamDedupEndstate(spark, sf).count(): Unit
+      IncrementalSync.streamUpsertManifestEndstate(spark, sf).count(): Unit
+      rec.stop()
+      rec.dump(jfr)
+      val spawns = RecordingFile.readAllEvents(jfr).asScala.map(_.getString("command"))
+      val shell = spawns.filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+      val forks = shell.size
+      assert(forks == 0, s"chmod/readlink spawns, e.g. ${shell.take(3).mkString("; ")}")
+    } finally {
+      rec.close()
+      Files.deleteIfExists(jfr): Unit
     }
   }
 
